@@ -8,7 +8,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tests import fingerprint_reference as ref
 from yelp_business_data_pipeline_spark.operators import dedup as dd
+from yelp_business_data_pipeline_spark.operators import text as tx
 from yelp_business_data_pipeline_spark.operators import similarity as sim
 from yelp_business_data_pipeline_spark.plans import QUERIES
 from yelp_business_data_pipeline_spark.plans.extensions import ann_cosine_topk
@@ -34,7 +36,7 @@ def test_minhash_signature_jaccard_estimate(spark):
     b = "w1 w2 w3 w4 w5 w6 w7 x8 x9 x10 x11 x12 x13"
     df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
     toks = F.split(F.col("text"), " ")
-    sigs = dd.minhash_rehash(dd.base_hashes(dd.word_shingles(toks, 3)), k=32)
+    sigs = ref.minhash_rehash(ref.base_hashes(ref.word_shingles(toks, 3)), k=32)
     out = df.select("doc_id", *[sig.alias(f"s{j}") for j, sig in enumerate(sigs)]).collect()
     r1, r2 = sorted(out, key=lambda r: r.doc_id)
     agree = sum(1 for j in range(32) if r1[f"s{j}"] == r2[f"s{j}"]) / 32
@@ -50,12 +52,7 @@ def test_simhash_properties(spark):
         (4, "totally unrelated vocabulary set right here ok"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r.doc_id: r.sh
-        for r in df.select(
-            "doc_id", dd.simhash(F.split("text", " "), bits=16).alias("sh")
-        ).collect()
-    }
+    out = {r.doc_id: r.simhash for r in dd.simhash_rows(df, "doc_id", "text", bits=16).collect()}
     hamming = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert out[1] == out[2]  # identical text -> identical fingerprint
     assert hamming(out[1], out[3]) <= hamming(out[1], out[4]), (
@@ -271,8 +268,8 @@ def test_winnowing_arrow_equals_relational(spark):
 
     sf = "/root/testdata/sf0.001"
     d = spark.read.parquet(f"{sf}/documents.parquet").filter(F.length("text") >= 8)
-    rel = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints_long(d, "doc_id", "text", 8, 4).collect()}
-    arr = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints_arrow(d, "doc_id", "text", 8, 4).collect()}
+    rel = {(r.doc_id, r.fp) for r in ref.winnowing_fingerprints_long(d, "doc_id", "text", 8, 4).collect()}
+    arr = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints(d, "doc_id", "text", 8, 4).collect()}
     assert rel == arr and rel
 
     # non-ASCII path: char-based slicing must match Spark's substring
@@ -280,15 +277,15 @@ def test_winnowing_arrow_equals_relational(spark):
         [(1, "café däjà vu — übermäßig gründlich geprüft"), (2, "plain ascii text goes here")],
         "doc_id long, text string",
     )
-    rel2 = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints_long(docs, "doc_id", "text", 8, 4).collect()}
-    arr2 = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints_arrow(docs, "doc_id", "text", 8, 4).collect()}
+    rel2 = {(r.doc_id, r.fp) for r in ref.winnowing_fingerprints_long(docs, "doc_id", "text", 8, 4).collect()}
+    arr2 = {(r.doc_id, r.fp) for r in tx.winnowing_fingerprints(docs, "doc_id", "text", 8, 4).collect()}
     assert rel2 == arr2 and rel2
 
 
 def test_minhash_band_kernel_equals_expression(spark):
-    """minhash_band_rows_kernel (the r12 Arrow path that
-    minhash_lsh_candidates now defaults to) must produce EXACTLY the
-    expression form's (_id, band, band_hash) rows — both hash families,
+    """minhash_band_rows (the Arrow kernel under minhash_lsh_candidates)
+    must produce EXACTLY the expression reference's (_id, band,
+    band_hash) rows — both hash families,
     non-default (k, rows_per_band, shingle_n), and the edge population
     (NULL text, empty text, docs shorter than the shingle, non-ASCII
     tokens, repeated spaces — Spark split keeps empty segments and the
@@ -296,8 +293,8 @@ def test_minhash_band_kernel_equals_expression(spark):
     sf = "/root/testdata/sf0.001"
     d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
     for impl in ("md5", "xxhash64"):
-        exp = sorted(map(tuple, dd.minhash_band_rows(d, "doc_id", "text", hash_impl=impl).collect()))
-        ker = sorted(map(tuple, dd.minhash_band_rows_kernel(d, "doc_id", "text", hash_impl=impl).collect()))
+        exp = sorted(map(tuple, ref.minhash_band_rows(d, "doc_id", "text", hash_impl=impl).collect()))
+        ker = sorted(map(tuple, dd.minhash_band_rows(d, "doc_id", "text", hash_impl=impl).collect()))
         assert exp == ker and exp, impl
 
     edge = spark.createDataFrame(
@@ -311,18 +308,18 @@ def test_minhash_band_kernel_equals_expression(spark):
         "doc_id long, text string",
     )
     for n, k, r in ((3, 8, 2), (2, 6, 3), (4, 5, 2)):
-        exp = sorted(map(tuple, dd.minhash_band_rows(
+        exp = sorted(map(tuple, ref.minhash_band_rows(
             edge, "doc_id", "text", k=k, rows_per_band=r, shingle_n=n).collect()))
-        ker = sorted(map(tuple, dd.minhash_band_rows_kernel(
+        ker = sorted(map(tuple, dd.minhash_band_rows(
             edge, "doc_id", "text", k=k, rows_per_band=r, shingle_n=n).collect()))
         assert exp == ker, (n, k, r)
         assert ker, (n, k, r)  # non-vacuous: the long docs produce bands
 
-    # the composed candidates path (kernel default ON) must equal the
-    # expression path end to end
+    # the composed candidates path must equal the same pairing over the
+    # reference band rows end to end
     big = spark.read.parquet(f"{sf}/documents.parquet")
-    a = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text", kernel=False).collect()))
-    b = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text", kernel=True).collect()))
+    a = sorted(map(tuple, ref.lsh_candidates(big, "doc_id", "text").collect()))
+    b = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text").collect()))
     assert a == b and a
 
 
@@ -363,11 +360,11 @@ def test_winnowing_arrow_equals_relational_xxhash64(spark):
     d = spark.read.parquet(f"{sf}/documents.parquet").filter(F.length("text") >= 8)
     rel = {
         (r.doc_id, r.fp)
-        for r in tx.winnowing_fingerprints_long(d, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
+        for r in ref.winnowing_fingerprints_long(d, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
     }
     arr = {
         (r.doc_id, r.fp)
-        for r in tx.winnowing_fingerprints_arrow(d, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
+        for r in tx.winnowing_fingerprints(d, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
     }
     assert rel == arr and rel
 
@@ -377,11 +374,11 @@ def test_winnowing_arrow_equals_relational_xxhash64(spark):
     )
     rel2 = {
         (r.doc_id, r.fp)
-        for r in tx.winnowing_fingerprints_long(docs, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
+        for r in ref.winnowing_fingerprints_long(docs, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
     }
     arr2 = {
         (r.doc_id, r.fp)
-        for r in tx.winnowing_fingerprints_arrow(docs, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
+        for r in tx.winnowing_fingerprints(docs, "doc_id", "text", 8, 4, hash_impl="xxhash64").collect()
     }
     assert rel2 == arr2 and rel2
 
@@ -758,10 +755,10 @@ def test_winnowing_xxhash64_large_kgram_falls_back(spark):
          (2, "the quick brown fox jumps over the lazy dog differently")],
         "doc_id long, text string",
     )
-    arrow = tx.winnowing_fingerprints_arrow(
+    arrow = tx.winnowing_fingerprints(
         df, "doc_id", "text", k=30, window=3, hash_impl="xxhash64"
     )
-    rel = tx.winnowing_fingerprints_long(
+    rel = ref.winnowing_fingerprints_long(
         df, "doc_id", "text", k=30, window=3, hash_impl="xxhash64"
     )
     assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, rel.collect()))
@@ -1051,12 +1048,12 @@ def test_fuzzy_dedup_clusters_operator_api(spark):
         fuzzy_dedup_clusters(df, "doc_id", "text", jaccard_threshold=1.5)
 
 
-def test_minhash_band_kernel_cache_cap_and_null_ids(spark):
-    """r13 (ADVICE r12): the kernel's per-task token-hash cache is
-    BOUNDED — a tiny cap must change memory behaviour only, never a
-    value — and NULL ids propagate through the kernel exactly like the
-    expression path (band rows computed from the text, _id NULL), for
-    integer AND string id columns."""
+def test_minhash_band_kernel_cache_cap_and_null_ids(spark, monkeypatch):
+    """The kernels' per-task token-hash cache is BOUNDED — a cap smaller
+    than the vocabulary must change memory behaviour only, never a value
+    — and NULL ids propagate through the kernel exactly like the
+    expression reference (band rows computed from the text, _id NULL),
+    for integer AND string id columns."""
     rows = [
         (None, "alpha beta gamma delta epsilon zeta eta theta"),
         (7, "alpha beta gamma delta epsilon zeta eta iota"),
@@ -1066,41 +1063,98 @@ def test_minhash_band_kernel_cache_cap_and_null_ids(spark):
     key = lambda t: (t[0] is None, str(t[0]), t[1], t[2])  # noqa: E731
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     exp = sorted(
-        map(tuple, dd.minhash_band_rows(df, "doc_id", "text").collect()), key=key
+        map(tuple, ref.minhash_band_rows(df, "doc_id", "text").collect()), key=key
     )
     ker = sorted(
-        map(tuple, dd.minhash_band_rows_kernel(df, "doc_id", "text").collect()),
+        map(tuple, dd.minhash_band_rows(df, "doc_id", "text").collect()),
         key=key,
     )
     assert exp == ker and exp
     assert any(t[0] is None for t in ker)  # the NULL id's band rows survive
-    # cap smaller than the vocabulary: identical rows (cache is memory-only)
+    sim_exp = sorted(
+        (r.doc_id or -1, r.simhash)
+        for r in ref.with_simhash(df, "text").select("doc_id", "simhash").collect()
+    )
+    # cap smaller than the vocabulary (read when the kernel is built):
+    # identical rows (cache is memory-only)
+    monkeypatch.setattr(dd, "TOKEN_CACHE_CAP", 2)
     capped = sorted(
-        map(
-            tuple,
-            dd.minhash_band_rows_kernel(
-                df, "doc_id", "text", token_cache_cap=2
-            ).collect(),
-        ),
+        map(tuple, dd.minhash_band_rows(df, "doc_id", "text").collect()),
         key=key,
     )
     assert capped == exp
+    sim_capped = sorted(
+        (r.doc_id or -1, r.simhash)
+        for r in dd.simhash_rows(df, "doc_id", "text").collect()
+    )
+    assert sim_capped == sim_exp and sim_exp
 
     srows = [(r[0] and f"id{r[0]}", r[1]) for r in rows]
     sdf = spark.createDataFrame(srows, "doc_id string, text string")
     sexp = sorted(
-        map(tuple, dd.minhash_band_rows(sdf, "doc_id", "text").collect()), key=key
+        map(tuple, ref.minhash_band_rows(sdf, "doc_id", "text").collect()), key=key
     )
     sker = sorted(
-        map(tuple, dd.minhash_band_rows_kernel(sdf, "doc_id", "text").collect()),
+        map(tuple, dd.minhash_band_rows(sdf, "doc_id", "text").collect()),
         key=key,
     )
     assert sexp == sker and sexp
 
 
+_KERNELS = {
+    "minhash_band_rows": (
+        lambda df: dd.minhash_band_rows(df, "doc_id", "text"),
+        lambda df: ref.minhash_band_rows(df, "doc_id", "text"),
+    ),
+    "simhash_rows": (
+        lambda df: dd.simhash_rows(df, "doc_id", "text"),
+        lambda df: ref.with_simhash(df, "text").select("doc_id", "simhash"),
+    ),
+    "winnowing_fingerprints": (
+        lambda df: tx.winnowing_fingerprints(df, "doc_id", "text"),
+        lambda df: ref.winnowing_fingerprints_long(df, "doc_id", "text"),
+    ),
+}
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("kernel", sorted(_KERNELS))
+def test_kernel_ids_survive_shared_arrow_batch(spark, kernel, id_type):
+    """A NULL id sharing an Arrow batch with a bigint above 2^53 must
+    leave that id unchanged (through pandas the nullable bigint column
+    widened to float64 and 2^53+1 came back as 2^53), and string ids
+    next to a NULL must round-trip too. The three rows sit in one
+    partition; padding rows fill the others, so the kernels' partition
+    floor leaves that partition — one Arrow batch — as it is."""
+    big = (1 << 53) + 1
+    rows = [
+        (None, "alpha beta gamma delta epsilon zeta"),
+        (big, "alpha beta gamma delta epsilon iota"),
+        (7, "one two three four five six"),
+    ]
+    if id_type == "string":
+        rows = [(r[0] and f"d{r[0]}", r[1]) for r in rows]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string").coalesce(1)
+    pad = spark.sparkContext.defaultParallelism - 1
+    if pad:
+        df = df.unionByName(
+            spark.range(pad, numPartitions=pad).select(
+                (F.col("id") + 100).cast(id_type).alias("doc_id"),
+                F.lit("padding row text").alias("text"),
+            )
+        )
+    product, reference = _KERNELS[kernel]
+    key = lambda t: tuple((v is None, str(v)) for v in t)  # noqa: E731
+    got = sorted(map(tuple, product(df).collect()), key=key)
+    want = sorted(map(tuple, reference(df).collect()), key=key)
+    assert got == want
+    assert any(t[0] is None for t in got)
+    assert any(t[0] == rows[1][0] for t in got)
+
+
 def test_simhash_kernel_equals_expression(spark):
-    """r13: simhash_rows_kernel (the Arrow single-pass replacing the 16
-    interpreted vote-folds) must produce EXACTLY with_simhash's values —
+    """simhash_rows (the Arrow single pass) must produce EXACTLY the
+    16 interpreted vote-folds of the expression reference —
     both hash families, the real corpus, and the edge population (NULL
     text -> simhash 0, empty text, single token, repeated spaces,
     non-ASCII)."""
@@ -1120,13 +1174,13 @@ def test_simhash_kernel_equals_expression(spark):
         for frame in (d, edge):
             exp = sorted(
                 (r.doc_id, r.simhash)
-                for r in dd.with_simhash(frame, "text", "simhash", bits=16, hash_impl=impl)
+                for r in ref.with_simhash(frame, "text", "simhash", bits=16, hash_impl=impl)
                 .select("doc_id", "simhash")
                 .collect()
             )
             ker = sorted(
                 (r.doc_id, r.simhash)
-                for r in dd.simhash_rows_kernel(
+                for r in dd.simhash_rows(
                     frame, "doc_id", "text", bits=16, hash_impl=impl
                 ).collect()
             )
@@ -1134,12 +1188,12 @@ def test_simhash_kernel_equals_expression(spark):
     # non-default width exercises the shift/pack loop bounds
     exp20 = sorted(
         (r.doc_id, r.simhash)
-        for r in dd.with_simhash(edge, "text", "simhash", bits=20)
+        for r in ref.with_simhash(edge, "text", "simhash", bits=20)
         .select("doc_id", "simhash")
         .collect()
     )
     ker20 = sorted(
         (r.doc_id, r.simhash)
-        for r in dd.simhash_rows_kernel(edge, "doc_id", "text", bits=20).collect()
+        for r in dd.simhash_rows(edge, "doc_id", "text", bits=20).collect()
     )
     assert exp20 == ker20

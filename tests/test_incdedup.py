@@ -273,10 +273,12 @@ def _store_side_exchange_keys(plan: str) -> str:
     return " ".join(out)
 
 
-def test_kernel_false_fallback_matches_kernel(spark):
-    """r13 (ADVICE r12): kernel=False routes the band construction
-    through the pure-JVM expression path — the index and the candidate
-    pairs must be identical either way."""
+def test_index_and_pairs_match_reference_bands(spark):
+    """The band index and the candidate pairs built on the Arrow band
+    kernel must equal the same index and join over the expression
+    reference's band rows (tests/fingerprint_reference.py)."""
+    from tests import fingerprint_reference as ref
+
     store = _docs(
         spark,
         [
@@ -293,18 +295,14 @@ def test_kernel_false_fallback_matches_kernel(spark):
         ],
     )
     idx_k = sorted(map(tuple, minhash_band_index(store).collect()))
-    idx_e = sorted(map(tuple, minhash_band_index(store, kernel=False).collect()))
+    idx_e = sorted(
+        map(tuple, ref.minhash_band_rows(store, "doc_id", "text")
+            .select("band", "band_hash", "_id").collect())
+    )
     assert idx_k == idx_e and idx_k
 
     pairs_k = sorted(
         map(tuple, near_dup_candidates_against_index(batch, minhash_band_index(store)).collect())
     )
-    pairs_e = sorted(
-        map(
-            tuple,
-            near_dup_candidates_against_index(
-                batch, minhash_band_index(store, kernel=False), kernel=False
-            ).collect(),
-        )
-    )
+    pairs_e = sorted(map(tuple, ref.index_candidates(batch, store).collect()))
     assert pairs_k == pairs_e and pairs_k

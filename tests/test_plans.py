@@ -84,6 +84,10 @@ def test_winnowing_is_shuffle_free_until_fingerprint_groupby(spark, sf_dir):
     p = plan_str(QUERIES["text_fingerprints_panel"].spark(spark, sf_dir))
     assert "Window" not in p, "winnowing regressed to the window-shuffle form"
     assert "SortAggregate" not in p
+    # both fingerprint kernels (simhash + winnowing) run as Arrow batches
+    # with no pandas conversion; the node tree precedes the first blank line
+    tree = p.split("\n\n")[0]
+    assert tree.count("MapInArrow") == 2 and "MapInPandas" not in p, tree
 
 
 def test_blocked_linkage_has_no_cartesian(plans):

@@ -10,7 +10,7 @@ and non-ASCII inputs (``tests/test_dedup_similarity.py``).
 Why this exists: ``portable_hash(..., impl="xxhash64")`` is the
 production (bench) hash family — JVM-native, ~2x cheaper than the md5
 oracle family — and the Arrow winnowing kernel
-(`operators/text.py:winnowing_fingerprints_arrow`) must reproduce its
+(`operators/text.py:winnowing_fingerprints`) must reproduce its
 values inside a Python worker to keep the zero-shuffle shape on the
 fast-hash path. ``pmod(xxhash64(s), 2^32)`` (the `portable_hash` fold)
 equals the LOW 32 BITS of the unsigned hash, because 2^64 ≡ 0 (mod 2^32):

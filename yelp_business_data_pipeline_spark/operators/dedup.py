@@ -9,13 +9,18 @@ Scale design notes (the point of each algorithm at 100 TB):
   *verification* stage, run only on candidate pairs (or bounded subsets), not
   the whole corpus.
 - **MinHash + LSH banding** — the scale path: k portable min-hashes per doc
-  (computed per-row with higher-order functions — no explode, no shuffle),
-  then band signatures, then an equi-join on (band, band_hash). Only docs
+  (one Arrow kernel pass per partition — no explode, no shuffle), then
+  band signatures, then an equi-join on (band, band_hash). Only docs
   sharing a band collide, so the join is output-bounded; AQE handles hot
   buckets. Hashes are md5-based so the DuckDB oracle reproduces them exactly.
 - **SimHash** — per-doc bit-majority fingerprint; near-dups differ in few
-  bits. Computed with higher-order functions per row; candidate pairs via
+  bits. Computed by an Arrow kernel per partition; candidate pairs via
   equality on the fingerprint (or banded substrings at scale).
+
+The MinHash, SimHash and winnowing (``text.winnowing_fingerprints``)
+kernels share one scaffold, :func:`_arrow_kernel`; their pure-JVM
+expression forms live in ``tests/fingerprint_reference.py`` as the
+reference models the parity tests pin them to.
 
 Every function returns column expressions / DataFrames and never collects.
 """
@@ -56,24 +61,12 @@ def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataF
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def word_shingles(tokens: Column, n: int = 3) -> Column:
-    """n-word shingles of a token array (empty if fewer than n tokens).
-
-    Pure higher-order functions — evaluated per row inside codegen, no
-    explode. DuckDB twin: ``list_transform(range(1, len(t)-n+2), i -> ...)``.
-    """
-    idx = F.sequence(F.lit(0), F.size(tokens) - n)
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", *[
-        F.element_at(tokens, (i + j + 1).cast("int")) for j in range(n)
-    ]))
-    return F.when(F.size(tokens) >= n, sh).otherwise(F.array().cast("array<string>"))
-
-
 #: Modulus for the affine rehash family (keeps products inside int64).
 MINHASH_MOD = 1 << 32
 
-#: Bound on the per-task distinct-token hash cache inside the Arrow
-#: kernels (ADVICE r12): the dict grows with the task's distinct
+#: Bound on the per-task hash cache of the Arrow fingerprint kernels
+#: (distinct tokens, or k-grams for winnowing; :func:`_arrow_kernel`):
+#: the dict grows with the task's distinct
 #: vocabulary across ALL batches of a partition, so a pathological
 #: high-vocabulary partition could push the Python worker toward its
 #: memory limit at 100 TB. When an insert grows the cache past the cap
@@ -99,25 +92,83 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(shingles: Column, k: int = 8, impl: str = "md5") -> list[Column]:
-    """k min-hash values over a shingle array, one column expression each.
+def _arrow_kernel(
+    rows: DataFrame, hash_impl: str, salt: str, id_name: str, fields: list, batch_fn
+) -> DataFrame:
+    """Shared ``mapInArrow`` scaffold of the three fingerprint kernels
+    (:func:`minhash_band_rows`, :func:`simhash_rows`,
+    ``text.winnowing_fingerprints``). ``rows`` is an (id, text) frame;
+    each output row is the id, named ``id_name``, then ``fields``.
 
-    One md5 per shingle (``portable_hash`` base), then k affine rehashes
-    ``sig_j = min over shingles of (a_j * h + b_j) mod 2^32`` — the standard
-    universal-hash MinHash construction (Broder 1997): P[sig_j(A)==sig_j(B)]
-    ~= J(A,B). Per-row array_min(transform(...)) over a shared base-hash
-    array — no shuffle, and the expensive md5 runs once per shingle, not k
-    times.
+    ``batch_fn(texts, h)`` holds the operator's per-document math. It gets
+    one Arrow batch's texts (``str`` or ``None``) and ``h``, the Python
+    twin of ``portable_hash(s, salt, hash_impl)``: md5's first four digest
+    bytes read big-endian (== ``conv(substr(md5, 1, 8), 16, 10)``), or
+    XXH64's low 32 bits (== the ``pmod(xxhash64, 2^32)`` fold, since
+    2^64 ≡ 0 mod 2^32). ``h`` memoizes per task in a dict cleared
+    wholesale at :data:`TOKEN_CACHE_CAP` entries (read here, when the
+    kernel is built). ``batch_fn`` returns ``(take, columns)``: the input
+    positions the output rows come from and one value sequence per field.
+
+    Output ids are ``take`` of the input's Arrow id column, so every id
+    type and NULL id comes back exactly as it went in.
+
+    Parallelism: one Python task per input partition, so an input with
+    fewer partitions than ``defaultParallelism`` (a small corpus in one
+    parquet file) is round-robin repartitioned up to it first — a tiny
+    exchange of the raw rows; an input with more splits repartitions
+    nothing. The floor is best-effort under AQE: the partition count read
+    here is the static pre-AQE number (an upstream shuffle reports
+    spark.sql.shuffle.partitions even where AQE later coalesces), so a
+    plan that AQE shrinks below the floor at runtime keeps its coalesced
+    width. The floor targets the single-file leaf scan, where the static
+    count IS the runtime count; repartitioning unconditionally would put
+    a full round-robin exchange of the raw corpus into every at-scale plan.
     """
-    return minhash_rehash(base_hashes(shingles, impl), k)
+    import hashlib
 
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
-def base_hashes(shingles: Column, impl: str = "md5") -> Column:
-    """One portable md5 hash per shingle. Materialize this as its own column
-    before computing the k rehashes: higher-order functions are interpreted
-    (no common-subexpression elimination), so inlining it into each sig
-    expression would recompute the md5 pass k times."""
-    return F.transform(shingles, lambda s: portable_hash(s, salt="mh:", impl=impl))
+    from ..functions.xxhash import xxh64
+
+    if hash_impl not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown hash_impl {hash_impl!r}")
+    use_xx = hash_impl == "xxhash64"
+    prefix = salt.encode("utf-8")
+    cache_cap = TOKEN_CACHE_CAP
+    id_field = rows.schema.fields[0]
+    schema = T.StructType([T.StructField(id_name, id_field.dataType), *fields])
+    names = schema.fieldNames()
+    arrow_types = [to_arrow_type(f.dataType) for f in fields]
+
+    def _run(batches):
+        cache: dict = {}
+
+        def h(s: str) -> int:
+            v = cache.get(s)
+            if v is None:
+                b = prefix + s.encode("utf-8")
+                if use_xx:
+                    v = xxh64(b) & 0xFFFFFFFF
+                else:
+                    v = int.from_bytes(hashlib.md5(b).digest()[:4], "big")
+                if len(cache) >= cache_cap:
+                    cache.clear()  # bounded memory; Zipfian head repopulates
+                cache[s] = v
+            return v
+
+        for batch in batches:
+            take, cols = batch_fn(batch.column(1).to_pylist(), h)
+            ids = batch.column(0).take(pa.array(take, pa.int64()))
+            arrays = [pa.array(c, t) for c, t in zip(cols, arrow_types)]
+            yield pa.RecordBatch.from_arrays([ids, *arrays], names=names)
+
+    width = rows.sparkSession.sparkContext.defaultParallelism
+    if rows.rdd.getNumPartitions() < width:
+        rows = rows.repartition(width)
+    return rows.mapInArrow(_run, schema)
 
 
 #: Shingle-combination constants (mirrored literally in the SQL oracle).
@@ -170,27 +221,6 @@ def folded_shingle_hashes(token_hashes: Column, n: int) -> Column:
     )
 
 
-def minhash_rehash(hashes: Column, k: int) -> list[Column]:
-    """k affine min-rehashes of a base-hash array."""
-
-    def _rehash_fn(a: int, b: int):
-        # Closure-bound constants (pyspark HOF lambdas fill extra params
-        # with lambda variables, so no default-arg binding).
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_MOD)
-
-    return [F.array_min(F.transform(hashes, _rehash_fn(a, b))) for a, b in minhash_params(k)]
-
-
-def lsh_bands(sig_cols: list[Column], rows_per_band: int = 2) -> list[Column]:
-    """Band signatures: md5 over each group of ``rows_per_band`` signature
-    values. Docs agreeing on ANY band become candidates (prob 1-(1-J^r)^b)."""
-    bands = []
-    for b in range(0, len(sig_cols), rows_per_band):
-        group = sig_cols[b : b + rows_per_band]
-        bands.append(F.md5(F.concat_ws(",", *[g.cast("string") for g in group])))
-    return bands
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -200,13 +230,11 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     hash_impl: str = "md5",
     max_bucket: int | None = 5_000,
-    kernel: bool = True,
-    kernel_min_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via MinHash+LSH banding.
 
-    Plan shape: project (signatures + band hashes, one pass per row) ->
-    posexplode bands -> groupBy (band, band_hash) collecting the (small)
+    Plan shape: band rows (:func:`minhash_band_rows`, one kernel pass per
+    partition) -> groupBy (band, band_hash) collecting the (small)
     bucket membership -> per-bucket pair expansion with higher-order
     functions -> distinct pairs. No self-join, so the signature computation
     runs exactly once; the only shuffles are the bucket groupBy and the
@@ -221,28 +249,8 @@ def minhash_lsh_candidates(
     blow-up). Run exact dedup first (it collapses those clusters), or
     raise/None the bound deliberately if your near-dup clusters are
     genuinely that large.
-
-    ``kernel`` (default True, r12 optimization round): compute the band
-    rows with :func:`minhash_band_rows_kernel` (vectorized Arrow pass,
-    byte-identical values) instead of the interpreted higher-order-
-    function expressions of :func:`minhash_band_rows`.
-    ``kernel_min_partitions=None`` (default) floors kernel parallelism
-    at the cluster's default parallelism — scale-adaptive: a small
-    single-file corpus gets a tiny round-robin exchange up to cluster
-    width, a real corpus with more input splits than cores repartitions
-    nothing. Pass an explicit int to override (1 = never repartition).
     """
-    if kernel:
-        if kernel_min_partitions is None:
-            kernel_min_partitions = df.sparkSession.sparkContext.defaultParallelism
-        bands = minhash_band_rows_kernel(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=kernel_min_partitions,
-        )
-    else:
-        bands = minhash_band_rows(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl
-        )
+    bands = minhash_band_rows(df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
     buckets = (
         bands.groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_set("_id")).alias("_ids"))
@@ -265,174 +273,69 @@ def minhash_band_rows(
     pairing) and :mod:`incdedup`'s persisted band index (cross-snapshot
     dedup). ONE definition so the band construction cannot drift between
     the self-join and the index-join consumers. Docs shorter than
-    ``shingle_n`` tokens produce no rows (no shingles, no signature)."""
-    toks = F.split(F.col(text_col), " ")
-    token_hashed = df.filter(F.size(F.split(F.col(text_col), " ")) >= shingle_n).select(
-        F.col(id_col).alias("_id"),
-        F.transform(toks, lambda t: portable_hash(t, salt="mh:", impl=hash_impl)).alias("_th"),
-    )
-    hashed = token_hashed.select(
-        "_id", shingle_hashes_from_tokens(F.col("_th"), shingle_n).alias("_hashes")
-    )
-    sigs = minhash_rehash(F.col("_hashes"), k)
-    band_exprs = lsh_bands(sigs, rows_per_band)
-    return hashed.select(
-        "_id", F.posexplode(F.array(*band_exprs)).alias("band", "band_hash")
-    )
+    ``shingle_n`` tokens produce no rows (no shingles, no signature).
 
+    Construction (Broder 1997): tokens split on single spaces (empty
+    segments kept, as Spark's ``split``), token hash
+    ``portable_hash(t, "mh:")``, shingle hashes combined as
+    :func:`shingle_hashes_from_tokens`, k affine rehashes
+    ``min((a_j * sh + b_j) mod 2^32)`` (:func:`minhash_params`), and per
+    band the md5 of the comma-joined ``rows_per_band`` signature values.
+    Byte-identical to the expression reference and the DuckDB band CTEs
+    (pinned in tests/test_dedup_similarity.py).
 
-def minhash_band_rows_kernel(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-    hash_impl: str = "md5",
-    min_partitions: int | None = None,
-    token_cache_cap: int | None = None,
-) -> DataFrame:
-    """Arrow-kernel twin of :func:`minhash_band_rows` — same (_id, band,
-    band_hash) rows, computed per partition in vectorized numpy instead
-    of interpreted JVM higher-order functions (r12 optimization round;
-    the :func:`text.winnowing_fingerprints_arrow` precedent).
-
-    Why: the expression form evaluates ~(tokens + shingles x (k+1))
-    interpreted lambda steps per document — HOFs don't participate in
-    whole-stage codegen — which measured ~4.7 s of the fuzzy-dedup
-    composition at sf0.1 (46k docs). Inside the kernel the same
-    construction is: one md5 per DISTINCT token per task (dict-cached —
-    the corpus vocabulary repeats heavily; the expression form hashes
-    every token instance), one vectorized shingle combine, one (k x
-    n_shingles) affine matrix rehash + row min, and ``k/rows_per_band``
-    band md5s per doc. Values are BYTE-IDENTICAL to the expression form
-    (hashlib md5 == Spark md5 on UTF-8 bytes; the numpy xxh64 mirror is
-    bit-identical to ``F.xxhash64`` — both already pinned by the
-    winnowing kernel) — re-pinned for this kernel in
-    tests/test_dedup_similarity.py.
-
-    ``min_partitions``: kernel parallelism equals input partitioning —
-    pass the cluster core count for small single-file corpora (tiny
-    round-robin exchange of raw rows); leave None at real scale where
-    the input already has thousands of splits. The floor is BEST-EFFORT
-    under AQE (ADVICE r12): the build-time partition count read here is
-    the static pre-AQE number — an upstream shuffle reports
-    spark.sql.shuffle.partitions even where AQE later coalesces — so a
-    plan that AQE shrinks below the floor at runtime keeps its coalesced
-    width. Acceptable by design: the floor targets the single-file
-    local-corpus case (a leaf scan, where the static count IS the
-    runtime count); repartitioning unconditionally would put a full
-    round-robin exchange of the raw corpus into every at-scale plan to
-    guard a local-mode edge.
-
-    ``token_cache_cap``: bound on the per-task distinct-token hash cache
-    (default :data:`TOKEN_CACHE_CAP`; values unaffected, memory only).
+    An Arrow kernel (:func:`_arrow_kernel`) because the expression form
+    evaluates ~(tokens + shingles x (k+1)) interpreted lambda steps per
+    document — higher-order functions get no whole-stage codegen —
+    which measured ~4.7 s of the fuzzy-dedup composition at sf0.1 (46k
+    docs). In the kernel: one hash per DISTINCT token per task, one
+    vectorized shingle combine, one (k x n_shingles) affine rehash + row
+    min, and ``k/rows_per_band`` band md5s per doc.
     """
     import hashlib
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..functions.xxhash import xxh64
-
-    if hash_impl not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_impl {hash_impl!r}")
-    use_xx = hash_impl == "xxhash64"
     n = shingle_n
-    # EXACT expression-path semantics: coefficient j gets the j-th entry
-    # of (C1, C2, 1) and zip truncates at three terms (n > 3 combines
-    # only the first three positions — replicated verbatim so the kernel
-    # can never drift from shingle_hashes_from_tokens).
+    # EXACT shingle_hashes_from_tokens semantics: coefficient j gets the
+    # j-th entry of (C1, C2, 1) and zip truncates at three terms (n > 3
+    # combines only the first three positions).
     coefs = list(zip(range(n), (SHINGLE_C1, SHINGLE_C2, 1)))
     params = minhash_params(k)
     a_vec = np.array([a for a, _ in params], dtype=np.int64).reshape(-1, 1)
     b_vec = np.array([b for _, b in params], dtype=np.int64).reshape(-1, 1)
     n_bands = (k + rows_per_band - 1) // rows_per_band
 
-    id_field = df.schema[id_col]
-    integral_id = isinstance(
-        id_field.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("_id", id_field.dataType),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("band_hash", T.StringType()),
-        ]
-    )
-    cache_cap = TOKEN_CACHE_CAP if token_cache_cap is None else token_cache_cap
-
-    def _bands(batches):
-        cache: dict = {}
-
-        def tok_hash(t: str) -> int:
-            h = cache.get(t)
-            if h is None:
-                if use_xx:
-                    h = xxh64(("mh:" + t).encode("utf-8")) & 0xFFFFFFFF
-                else:
-                    h = int.from_bytes(
-                        hashlib.md5(("mh:" + t).encode("utf-8")).digest()[:4], "big"
-                    )
-                if len(cache) >= cache_cap:
-                    cache.clear()  # bounded memory; Zipfian head repopulates
-                cache[t] = h
-            return h
-
-        for pdf in batches:
-            idx_out: list = []  # input row positions, one per emitted doc row
-            band_out: list = []
-            hash_out: list = []
-            for i, text in enumerate(pdf.iloc[:, 1]):
-                if text is None:
-                    continue  # upstream filter drops these; belt-and-braces
-                toks = text.split(" ")
-                m = len(toks) - n + 1
-                if m < 1:
-                    continue
-                th = np.fromiter(
-                    (tok_hash(t) for t in toks), dtype=np.int64, count=len(toks)
+    def _bands(texts, h):
+        take: list = []
+        hash_out: list = []
+        for i, text in enumerate(texts):
+            if text is None:
+                continue  # the upstream filter drops these; belt-and-braces
+            toks = text.split(" ")
+            m = len(toks) - n + 1
+            if m < 1:
+                continue
+            th = np.fromiter((h(t) for t in toks), dtype=np.int64, count=len(toks))
+            sh = np.zeros(m, dtype=np.int64)
+            for j, c in coefs:
+                sh += th[j : j + m] * c
+            sh %= MINHASH_MOD
+            sigs = ((a_vec * sh + b_vec) % MINHASH_MOD).min(axis=1)
+            for bidx in range(n_bands):
+                grp = sigs[bidx * rows_per_band : (bidx + 1) * rows_per_band]
+                hash_out.append(
+                    hashlib.md5(",".join(str(int(s)) for s in grp).encode()).hexdigest()
                 )
-                sh = np.zeros(m, dtype=np.int64)
-                for j, c in coefs:
-                    sh += th[j : j + m] * c
-                sh %= MINHASH_MOD
-                sigs = ((a_vec * sh + b_vec) % MINHASH_MOD).min(axis=1)
-                for bidx in range(n_bands):
-                    grp = sigs[bidx * rows_per_band : (bidx + 1) * rows_per_band]
-                    hash_out.append(
-                        hashlib.md5(
-                            ",".join(str(int(s)) for s in grp).encode()
-                        ).hexdigest()
-                    )
-                idx_out.extend([i] * n_bands)
-                band_out.extend(range(n_bands))
-            # _id built from the ORIGINAL pandas values by position (ADVICE
-            # r12): a nullable numeric id column arrives as float64 with
-            # NaN for NULLs — take() preserves that, and the Int64 cast
-            # restores nullable-integer semantics so Arrow emits NULL ids
-            # exactly like the expression path (which passes NULL _id rows
-            # through). Non-null integral ids round-trip exactly (pandas
-            # only widens to float when NULLs are PRESENT; ids < 2^53 —
-            # the float64 mantissa — survive that widening losslessly).
-            ids = pdf.iloc[:, 0].take(idx_out).reset_index(drop=True)
-            if integral_id and ids.dtype.kind == "f":
-                ids = ids.astype("Int64")
-            yield pd.DataFrame(
-                {
-                    "_id": ids,
-                    "band": pd.Series(band_out, dtype="int32"),
-                    "band_hash": pd.Series(hash_out, dtype=object),
-                }
-            )
+            take.extend([i] * n_bands)
+        return take, [list(range(n_bands)) * (len(take) // n_bands), hash_out]
 
-    rows = df.filter(
-        F.size(F.split(F.col(text_col), " ")) >= shingle_n
-    ).select(F.col(id_col), F.col(text_col))
-    if min_partitions is not None and rows.rdd.getNumPartitions() < min_partitions:
-        rows = rows.repartition(min_partitions)
-    return rows.mapInPandas(_bands, schema=schema)
+    rows = df.filter(F.size(F.split(F.col(text_col), " ")) >= shingle_n).select(
+        F.col(id_col), F.col(text_col)
+    )
+    fields = [T.StructField("band", T.IntegerType()), T.StructField("band_hash", T.StringType())]
+    return _arrow_kernel(rows, hash_impl, "mh:", "_id", fields, _bands)
 
 
 def bucket_pairs(
@@ -629,160 +532,56 @@ def token_jaccard_pairs(
     )
 
 
-def simhash(tokens: Column, bits: int = 16, impl: str = "md5") -> Column:
-    """SimHash fingerprint (Charikar 2002): for each bit position, sum +-1
-    votes of each token's hash bit; the sign vector packs into an int.
-
-    Per-row higher-order functions; near-duplicate docs land within small
-    Hamming distance. 16 bits keeps the expression tree small while
-    demonstrating the operator; widen via multiple 16-bit words at scale.
-    """
-    return simhash_from_hashes(
-        F.transform(tokens, lambda t: portable_hash(t, salt="sh:", impl=impl)), bits
-    )
-
-
-def simhash_from_hashes(token_hashes: Column, bits: int = 16) -> Column:
-    """SimHash from a pre-hashed token array. Prefer materializing the hash
-    array in its own projection first (see :func:`with_simhash`): inlined,
-    the md5 pass would be re-evaluated once per bit."""
-
-    def _vote_fn(i: int):
-        # Closure-bound bit index (see minhash_signature note on lambda arity).
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for i in range(bits):
-        votes = F.aggregate(token_hashes, F.lit(0), _vote_fn(i))
-        bit_cols.append(F.when(votes > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out.cast("bigint")
-
-
-def with_simhash(
-    df: DataFrame, text_col: str, out_col: str = "simhash", bits: int = 16,
-    hash_impl: str = "md5",
-) -> DataFrame:
-    """Add a SimHash fingerprint column: token md5s materialize once in a
-    separate projection, then ``bits`` vote-folds read the shared array
-    (Catalyst keeps the non-cheap alias un-inlined across the 16 uses)."""
-    hashed = df.withColumn(
-        "_token_hashes",
-        F.transform(F.split(F.col(text_col), " "), lambda t: portable_hash(t, salt="sh:", impl=hash_impl)),
-    )
-    return hashed.withColumn(out_col, simhash_from_hashes(F.col("_token_hashes"), bits)).drop(
-        "_token_hashes"
-    )
-
-
-def simhash_rows_kernel(
+def simhash_rows(
     df: DataFrame,
     id_col: str,
     text_col: str,
     out_col: str = "simhash",
     bits: int = 16,
     hash_impl: str = "md5",
-    min_partitions: int | None = None,
-    token_cache_cap: int | None = None,
 ) -> DataFrame:
-    """(id, simhash) rows via a vectorized Arrow kernel — byte-identical
-    to :func:`with_simhash`'s fingerprints (r13 optimization round; the
-    :func:`minhash_band_rows_kernel` precedent).
+    """(id, simhash) rows — SimHash (Charikar 2002): for each of ``bits``
+    positions, sum +-1 votes of each token's ``portable_hash(t, "sh:")``
+    bit; the sign vector packs into an int, so near-duplicate docs land
+    within small Hamming distance. NULL text -> simhash 0.
 
-    Why: the expression form folds ``bits`` separate interpreted
-    ``aggregate()`` passes over the shared token-hash array — HOFs do
-    not participate in whole-stage codegen, so every document pays
-    16 x n_tokens interpreted lambda steps even though the md5 pass is
-    shared. Inside the kernel the same construction is: one md5 (or
-    numpy XXH64) per DISTINCT token per task (bounded dict cache), ONE
-    (total_tokens x bits) bit-matrix, and a per-document segmented vote
-    reduction (``np.add.reduceat``) — exact int64 arithmetic, so the
-    votes and the packed fingerprint are bit-identical (pinned for both
+    An Arrow kernel (:func:`_arrow_kernel`): one hash per DISTINCT token
+    per task, ONE (total_tokens x bits) bit matrix per batch, and a
+    per-document segmented vote sum (``np.add.reduceat``) — exact int64
+    arithmetic, so the fingerprints equal the ``bits`` interpreted
+    vote-folds of the expression reference bit for bit (pinned for both
     hash families, non-default widths and the NULL/empty/short edges in
-    tests/test_dedup_similarity.py). NULL text -> simhash 0, matching
-    the expression path (NULL votes fall through every when() to the
-    0-bit branch).
-
-    ``min_partitions`` / ``token_cache_cap``: same semantics (and the
-    same best-effort-under-AQE caveat) as
-    :func:`minhash_band_rows_kernel`.
+    tests/test_dedup_similarity.py).
     """
-    import hashlib
-
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..functions.xxhash import xxh64
-
-    if hash_impl not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_impl {hash_impl!r}")
-    use_xx = hash_impl == "xxhash64"
-
-    id_field = df.schema[id_col]
-    integral_id = isinstance(
-        id_field.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    )
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField(out_col, T.LongType()),
-        ]
-    )
-    cache_cap = TOKEN_CACHE_CAP if token_cache_cap is None else token_cache_cap
     shifts = np.arange(bits, dtype=np.int64)
 
-    def _simhash(batches):
-        cache: dict = {}
+    def _simhash(texts, h):
+        sims = np.zeros(len(texts), dtype=np.int64)  # NULL text -> 0
+        hashes: list = []
+        rows: list = []  # (row position, token count) per non-null doc
+        for i, text in enumerate(texts):
+            if text is None:
+                continue
+            toks = text.split(" ")
+            hashes.extend(h(t) for t in toks)
+            rows.append((i, len(toks)))
+        if rows:
+            h_all = np.fromiter(hashes, dtype=np.int64, count=len(hashes))
+            # (total_tokens x bits) +-1 vote matrix, segment-summed per doc
+            contrib = (((h_all[:, None] >> shifts) & 1) * 2 - 1).astype(np.int64)
+            counts = np.array([c for _, c in rows], dtype=np.int64)
+            offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
+            votes = np.add.reduceat(contrib, offsets, axis=0)
+            packed = ((votes > 0).astype(np.int64) << shifts).sum(axis=1)
+            sims[np.array([i for i, _ in rows], dtype=np.int64)] = packed
+        return range(len(texts)), [sims]
 
-        def tok_hash(t: str) -> int:
-            h = cache.get(t)
-            if h is None:
-                if use_xx:
-                    h = xxh64(("sh:" + t).encode("utf-8")) & 0xFFFFFFFF
-                else:
-                    h = int.from_bytes(
-                        hashlib.md5(("sh:" + t).encode("utf-8")).digest()[:4], "big"
-                    )
-                if len(cache) >= cache_cap:
-                    cache.clear()  # bounded memory; Zipfian head repopulates
-                cache[t] = h
-            return h
-
-        for pdf in batches:
-            texts = pdf.iloc[:, 1]
-            sims = np.zeros(len(pdf), dtype=np.int64)  # NULL text -> 0
-            hashes: list = []
-            rows: list = []  # (row position, token count) per non-null doc
-            for i, text in enumerate(texts):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                hashes.extend(tok_hash(t) for t in toks)
-                rows.append((i, len(toks)))
-            if rows:
-                h_all = np.fromiter(hashes, dtype=np.int64, count=len(hashes))
-                # (total_tokens x bits) +-1 vote matrix, segment-summed per
-                # doc: exact int64 throughout, identical to the fold.
-                contrib = (((h_all[:, None] >> shifts) & 1) * 2 - 1).astype(np.int64)
-                counts = np.array([c for _, c in rows], dtype=np.int64)
-                offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                votes = np.add.reduceat(contrib, offsets, axis=0)
-                packed = ((votes > 0).astype(np.int64) << shifts).sum(axis=1)
-                sims[np.array([i for i, _ in rows], dtype=np.int64)] = packed
-            ids = pdf.iloc[:, 0].reset_index(drop=True)
-            if integral_id and ids.dtype.kind == "f":
-                ids = ids.astype("Int64")  # NULL ids survive (kernel parity)
-            yield pd.DataFrame({id_col: ids, out_col: pd.Series(sims)})
-
-    rows_in = df.select(F.col(id_col), F.col(text_col))
-    if min_partitions is not None and rows_in.rdd.getNumPartitions() < min_partitions:
-        rows_in = rows_in.repartition(min_partitions)
-    return rows_in.mapInPandas(_simhash, schema=schema)
+    rows = df.select(F.col(id_col), F.col(text_col))
+    fields = [T.StructField(out_col, T.LongType())]
+    return _arrow_kernel(rows, hash_impl, "sh:", id_col, fields, _simhash)
 
 
 def soft_dedup_weights(

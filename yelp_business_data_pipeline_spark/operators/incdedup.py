@@ -17,8 +17,8 @@ Spark shapes:
   recurring join exchange-free on the store side;
 - the exact fingerprint reuses ``text.fingerprint`` (md5 of the leading
   token prefix — blocking-grade identity, DuckDB-reproducible), the band
-  index reuses the shared dedup band construction (r12: the Arrow kernel,
-  with the within-corpus ``minhash_lsh_candidates``);
+  index reuses the shared dedup band construction (the Arrow kernel
+  ``dedup.minhash_band_rows``, shared with ``minhash_lsh_candidates``);
 - the near-dup join carries the skew guard of the within-corpus family:
   a store band bucket larger than ``max_store_bucket`` fails loudly
   (executor-side raise naming the size) instead of silently exploding
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import minhash_band_rows, minhash_band_rows_kernel
+from .dedup import minhash_band_rows
 
 
 def exact_fingerprint_index(
@@ -109,24 +109,12 @@ def minhash_band_index(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     hash_impl: str = "md5",
-    kernel: bool = True,
 ) -> DataFrame:
     """(band, band_hash, index_id) — the near-dup index of a corpus
     snapshot: one row per (doc, LSH band), the exact construction of
-    ``minhash_lsh_candidates`` (shared band layer — r12: the vectorized
-    Arrow kernel, byte-identical to ``minhash_band_rows`` and pinned so
-    in tests/test_dedup_similarity.py), stored instead of self-joined.
-
-    ``kernel=False`` (r13, ADVICE r12) falls back to the pure-JVM
-    expression band construction — same rows, no Python workers — for
-    deployments that cannot size Python worker memory."""
-    if not kernel:
-        bands = minhash_band_rows(df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
-    else:
-        bands = minhash_band_rows_kernel(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=df.sparkSession.sparkContext.defaultParallelism,
-        )
+    ``minhash_lsh_candidates`` (the shared ``dedup.minhash_band_rows``
+    Arrow kernel), stored instead of self-joined."""
+    bands = minhash_band_rows(df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
     return bands.select("band", "band_hash", F.col("_id").alias("index_id"))
 
 
@@ -140,7 +128,6 @@ def near_dup_candidates_against_index(
     shingle_n: int = 3,
     hash_impl: str = "md5",
     max_store_bucket: int | None = 10_000,
-    kernel: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (batch_id, index_id) between a new batch
     and a stored band index: build the batch's band rows (the batch is
@@ -156,13 +143,7 @@ def near_dup_candidates_against_index(
     cluster size. The guard is a window count on the store side (one
     exchange over the index, only when enabled); the raise names the
     observed size, the ``bucket_pairs`` contract."""
-    if not kernel:  # expression fallback, same rows (ADVICE r12)
-        braw = minhash_band_rows(batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
-    else:
-        braw = minhash_band_rows_kernel(
-            batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=batch.sparkSession.sparkContext.defaultParallelism,
-        )
+    braw = minhash_band_rows(batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
     bands = braw.select("band", "band_hash", F.col("_id").alias("batch_id"))
     store = index
     if max_store_bucket is not None:

@@ -379,195 +379,74 @@ def bag_fingerprint(text: Column) -> Column:
     return F.when(text.isNotNull(), F.md5(bag))
 
 
-def char_kgram_hashes(text: Column, k: int = 8, impl: str = "md5") -> Column:
-    """Portable hash of every character k-gram (empty array for short text).
-
-    The k-gram hash is recomputed per position — O(n*k) instead of the
-    sequential rolling-hash O(n): the right trade for a data-parallel
-    engine (no cross-position dependency), and md5-portable so the DuckDB
-    oracle reproduces the values exactly.
-    """
-    from .dedup import portable_hash
-
-    n_grams = F.length(text) - (k - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: portable_hash(F.substring(text, i, F.lit(k)), salt="wn:", impl=impl),
-    )
-    return F.when(n_grams >= 1, grams).otherwise(F.array().cast("array<bigint>"))
-
-
-def winnowing_from_hashes(gram_hashes: Column, window: int = 4) -> Column:
-    """Winnowing fingerprint selection (Schleimer et al. 2003, the MOSS
-    algorithm): the minimum hash of each sliding window of ``window``
-    consecutive k-gram hashes, distinct + sorted. Any shared substring of
-    length >= k + window - 1 contributes a shared fingerprint — the robust
-    containment/near-dup detector a prefix fingerprint can't provide.
-
-    Materialize ``gram_hashes`` in its own projection first (it is
-    referenced by both size() and every window slice)."""
-    n_windows = F.size(gram_hashes) - (window - 1)
-    mins = F.transform(
-        F.sequence(F.lit(1), n_windows),
-        lambda j: F.array_min(F.slice(gram_hashes, j, window)),
-    )
-    return F.array_sort(
-        F.array_distinct(F.when(n_windows >= 1, mins).otherwise(F.array().cast("array<bigint>")))
-    )
-
-
-def winnowing_fingerprints_long(
+def winnowing_fingerprints(
     df, id_col: str, text_col: str, k: int = 8, window: int = 4,
     hash_impl: str = "md5",
 ):
-    """Winnowing fingerprints in long form: one (id, fp) row per distinct
-    fingerprint per document — pure-JVM relational formulation.
+    """Winnowing fingerprints (Schleimer et al. 2003, the MOSS algorithm):
+    one (id, fp) row per distinct fingerprint per document, where the
+    fingerprints are the minimum hash of each sliding window of
+    ``window`` consecutive character k-gram hashes. Any shared substring
+    of length >= k + window - 1 contributes a shared fingerprint — the
+    robust containment/near-dup detector a prefix fingerprint can't
+    provide. NULL text and docs with fewer than ``window`` k-grams yield
+    no rows.
 
-    Posexplode the gram hashes to (id, pos, h) rows, take the min over
-    each full sliding window with a window frame (ROWS BETWEEN CURRENT
-    AND window-1 FOLLOWING), drop tail windows, distinct. Linear, unlike
-    the array-typed :func:`winnowing_from_hashes` which re-evaluates the
-    gram-hash array per window once Catalyst collapses projections
-    (measured 100x slower) — but it pays a doc-id shuffle + sort for a
-    computation that is per-document: :func:`winnowing_fingerprints_arrow`
-    does the same work shuffle-free (measured 3x faster end-to-end) and
-    is the registered-query implementation; this form is the UDF-free
-    fallback and the equivalence test's second witness.
+    k-gram hashes are ``portable_hash(substring(text, i, k), "wn:",
+    hash_impl)`` over Spark's character-based substring, so the DuckDB
+    oracle reproduces the md5 family exactly; the xxhash64 family hashes
+    ASCII docs in one vectorized XXH64 pass (``functions/xxhash.py``,
+    bit-identical to ``F.xxhash64``).
+
+    Winnowing is per-DOCUMENT work and a document is one row, so this is
+    an Arrow kernel (``dedup._arrow_kernel``): hash -> sliding-window min
+    (numpy stride view) -> distinct entirely inside the partition. The
+    relational window form (the test reference) moves 1M+ exploded gram
+    rows through a doc-id shuffle + sort only to reunite each doc —
+    measured 3x slower end-to-end at sf0.1 (6.0s -> 2.0s).
     """
-    from pyspark.sql import Window
-
-    # max window start = n_grams - window + 1, computable per row from the
-    # text length (posexplode emits 0-based pos) — no second window pass.
-    grams = df.select(
-        F.col(id_col),
-        (F.length(text_col) - (k - 1) - window).alias("_last_start"),
-        F.posexplode(char_kgram_hashes(F.col(text_col), k, hash_impl)).alias("_pos", "_h"),
-    )
-    w_frame = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, window - 1)
-    return (
-        grams.withColumn("_wm", F.min("_h").over(w_frame))
-        .filter(F.col("_pos") <= F.col("_last_start"))
-        .select(F.col(id_col), F.col("_wm").alias("fp"))
-        .distinct()
-    )
-
-
-def winnowing_fingerprints_arrow(
-    df, id_col: str, text_col: str, k: int = 8, window: int = 4,
-    min_partitions: int | None = None, hash_impl: str = "md5",
-):
-    """Winnowing fingerprints via an Arrow kernel — the zero-shuffle shape.
-
-    Winnowing is per-DOCUMENT computation and a document is one row, so
-    the relational form's partitionBy(doc_id) window shuffle+sort moves
-    1M+ exploded gram rows only to bring each doc's hashes back together
-    — pure overhead. This kernel streams Arrow batches through
-    mapInPandas and does hash -> sliding-window min (numpy stride view)
-    -> distinct entirely inside the partition. Values are EXACTLY the
-    md5 construction the DuckDB oracle reproduces (hashlib md5 ==
-    Spark/DuckDB md5; int.from_bytes(digest[:4]) == conv(substr(md5,1,8),16,10),
-    cheaper than hexdigest+parse) — pinned
-    equal to the relational form in pytest. Measured 3x end-to-end at
-    sf0.1 (6.0s -> 2.0s).
-
-    Spark's substring is character-based, so non-ASCII docs take the
-    char-slice path; ASCII (the common case) slices bytes directly.
-
-    ``min_partitions``: the kernel's parallelism equals the INPUT
-    partitioning — a small corpus in one parquet file runs the whole
-    hash pass in a single Python worker. Passing the cluster's core
-    count round-robins the raw (id, text) rows first: a tiny exchange
-    (the un-exploded rows) that unlocks full-width hashing. At real
-    scale the input already has thousands of splits — leave it None and
-    the kernel stays literally zero-shuffle.
-
-    ``hash_impl``: the ``portable_hash`` family. ``"md5"`` (default) is
-    the oracle-reproducible construction above; ``"xxhash64"`` is the
-    production family — reproduced in-kernel by the numpy-vectorized
-    XXH64 (``functions/xxhash.py``, bit-identical to ``F.xxhash64``;
-    the pmod-2^32 fold is a mask because 2^64 ≡ 0 mod 2^32). Both pinned
-    equal to the relational ``winnowing_fingerprints_long`` in pytest.
-    """
-    import hashlib
-
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..functions.xxhash import xxh64, xxh64_rows
+    from ..functions.xxhash import xxh64_rows
+    from .dedup import _arrow_kernel
 
-    if hash_impl not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_impl {hash_impl!r}")
+    salt = "wn:"
+    salt_bytes = np.frombuffer(salt.encode(), dtype=np.uint8)
     use_xx = hash_impl == "xxhash64"
-    salt = b"wn:"
+    no_fps = np.empty(0, dtype=np.int64)
 
-    id_field = df.schema[id_col]
-    schema = T.StructType(
-        [T.StructField(id_col, id_field.dataType), T.StructField("fp", T.LongType())]
-    )
-
-    def _hash_ascii(b: bytes, n: int) -> np.ndarray:
-        if use_xx:
+    def _doc_fps(text: str, h) -> np.ndarray:
+        n = len(text) - k + 1
+        if n < window:
+            return no_fps
+        if use_xx and text.isascii():
             # (n, len(salt)+k) byte matrix: salt prefix + sliding k-gram view
-            arr = np.frombuffer(b, dtype=np.uint8)
-            grams = np.lib.stride_tricks.sliding_window_view(arr, k)[:n]
-            mat = np.empty((n, len(salt) + k), dtype=np.uint8)
-            mat[:, : len(salt)] = np.frombuffer(salt, dtype=np.uint8)
-            mat[:, len(salt) :] = grams
-            return (xxh64_rows(mat) & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        return np.fromiter(
-            (int.from_bytes(hashlib.md5(salt + b[i : i + k]).digest()[:4], "big") for i in range(n)),
-            dtype=np.int64,
-            count=n,
-        )
-
-    def _hash_chars(text: str, n: int) -> np.ndarray:
-        if use_xx:
-            return np.fromiter(
-                (xxh64(salt + text[i : i + k].encode("utf-8")) & 0xFFFFFFFF for i in range(n)),
-                dtype=np.int64,
-                count=n,
-            )
-        return np.fromiter(
-            (
-                int.from_bytes(hashlib.md5(salt + text[i : i + k].encode("utf-8")).digest()[:4], "big")
-                for i in range(n)
-            ),
-            dtype=np.int64,
-            count=n,
-        )
-
-    def _doc_fps(text: str) -> np.ndarray:
-        if text is None:  # match the relational form: null text -> no rows
-            return np.empty(0, dtype=np.int64)
-        if text.isascii():
-            b = text.encode("utf-8")
-            n = len(b) - k + 1
-            if n < window:
-                return np.empty(0, dtype=np.int64)
-            h = _hash_ascii(b, n)
+            grams = np.lib.stride_tricks.sliding_window_view(
+                np.frombuffer(text.encode("ascii"), dtype=np.uint8), k
+            )[:n]
+            mat = np.empty((n, len(salt_bytes) + k), dtype=np.uint8)
+            mat[:, : len(salt_bytes)] = salt_bytes
+            mat[:, len(salt_bytes) :] = grams
+            hs = (xxh64_rows(mat) & np.uint64(0xFFFFFFFF)).astype(np.int64)
         else:
-            n = len(text) - k + 1
-            if n < window:
-                return np.empty(0, dtype=np.int64)
-            h = _hash_chars(text, n)
-        wins = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
-        return np.unique(wins)
+            hs = np.fromiter((h(text[i : i + k]) for i in range(n)), dtype=np.int64, count=n)
+        return np.unique(np.lib.stride_tricks.sliding_window_view(hs, window).min(axis=1))
 
-    def _winnow(batches):
-        for pdf in batches:
-            ids: list = []
-            fps: list = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                u = _doc_fps(text)
-                ids.extend([doc_id] * len(u))
-                fps.extend(u.tolist())
-            yield pd.DataFrame({id_col: ids, "fp": fps})
+    def _winnow(texts, h):
+        take: list = []
+        fps: list = []
+        for i, text in enumerate(texts):
+            if text is None:
+                continue
+            u = _doc_fps(text, h)
+            take.extend([i] * len(u))
+            fps.extend(u.tolist())
+        return take, [fps]
 
     rows = df.select(id_col, text_col)
-    if min_partitions is not None and rows.rdd.getNumPartitions() < min_partitions:
-        rows = rows.repartition(min_partitions)
-    return rows.mapInPandas(_winnow, schema=schema)
+    fields = [T.StructField("fp", T.LongType())]
+    return _arrow_kernel(rows, hash_impl, salt, id_col, fields, _winnow)
 
 
 #: Gopher repetition thresholds (Rae et al. 2021, "Scaling Language
@@ -786,7 +665,7 @@ def gopher_repetition_metrics(
 
     Scale shape: repetition is per-DOCUMENT computation and a document
     is one row, so this is an Arrow ``mapInPandas`` kernel — ZERO
-    shuffle, the winnowing_fingerprints_arrow precedent (the relational
+    shuffle, the winnowing_fingerprints precedent (the relational
     explode+groupBy form would shuffle every n-gram occurrence only to
     regroup rows that never left their document). ``impl="numpy"``
     (default) runs the batch-vectorized kernel (:func:`_gopher_rows_numpy`

@@ -97,7 +97,8 @@ def _sql_duplicate_spans(k: int = 5, min_count: int = 2) -> str:
 
 def _sql_band_ctes(src: str = "documents", p: str = "", k: int = 8, rows_per_band: int = 2) -> str:
     """CTE chain ending in ``{p}bands(doc_id, band, band_hash)`` over the
-    relation ``src`` — the DuckDB mirror of ``dedup.minhash_band_rows``,
+    relation ``src`` — the DuckDB mirror of the ``dedup.minhash_band_rows``
+    Arrow kernel's construction,
     shared by the within-corpus minhash twin and the incremental-dedup
     twin so the band construction cannot drift between them."""
     from ..operators.dedup import MINHASH_MOD, SHINGLE_C1, SHINGLE_C2, minhash_params
@@ -587,15 +588,11 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair generation at scale = equality or banded-prefix join.
     Oracle-gated as the ``simhash`` branch of ``text_fingerprints_panel``.
 
-    r13: computed by the Arrow kernel (one bit-matrix + segmented vote
-    reduction per batch) instead of the 16 interpreted vote-fold
-    expressions — byte-identical values (tests/test_dedup_similarity.py),
-    same min_partitions rationale as the winnowing branch below."""
+    Computed by the ``dd.simhash_rows`` Arrow kernel (one bit matrix +
+    segmented vote reduction per batch), value-equal to the 16
+    interpreted vote-fold expressions of the test reference."""
     d = tbl(spark, sf_dir, "documents")
-    return dd.simhash_rows_kernel(
-        d, "doc_id", "text", bits=16,
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    return dd.simhash_rows(d, "doc_id", "text", bits=16)
 
 
 # ---------------------------------------------------------------------------
@@ -715,13 +712,7 @@ def winnowing_shared_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame
     value-equal to the pure-JVM relational form in pytest. Oracle-gated
     as the ``winnowing_shared`` branch of ``text_fingerprints_panel``."""
     d = tbl(spark, sf_dir, "documents").filter(F.length("text") >= 8)
-    fps = tx.winnowing_fingerprints_arrow(
-        d, "doc_id", "text", k=8, window=4,
-        # One parquet file would mean ONE Python worker hashes the whole
-        # corpus; round-robin the raw rows to cluster width first (tiny
-        # exchange, 32x kernel parallelism — see operator docstring).
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    fps = tx.winnowing_fingerprints(d, "doc_id", "text", k=8, window=4)
     return (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2388,10 +2379,7 @@ def minhash_lsh_pairs_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_fingerprints_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents")
-    return dd.simhash_rows_kernel(
-        d, "doc_id", "text", bits=16, hash_impl="xxhash64",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    return dd.simhash_rows(d, "doc_id", "text", bits=16, hash_impl="xxhash64")
 
 
 @query(
@@ -2403,15 +2391,11 @@ def simhash_fingerprints_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame
     "reproduces F.xxhash64 bit-exactly via numpy-vectorized XXH64 "
     "(functions/xxhash.py) so the fast-hash family no longer pays the "
     "relational substring+explode form (was 5.8s at sf0.1; the relational "
-    "winnowing_fingerprints_long(hash_impl='xxhash64') remains the tested "
-    "pure-JVM fallback and the equivalence test's second witness).",
+    "form is the test reference the kernel is pinned to).",
 )
 def winnowing_fingerprints_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents").filter(F.length("text") >= 8)
-    fps = tx.winnowing_fingerprints_arrow(
-        d, "doc_id", "text", k=8, window=4, hash_impl="xxhash64",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    fps = tx.winnowing_fingerprints(d, "doc_id", "text", k=8, window=4, hash_impl="xxhash64")
     return (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"))
